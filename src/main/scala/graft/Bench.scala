@@ -43,15 +43,10 @@ object Bench {
         // pinned storage (CC label blocks, shingle caches, IVF bucket
         // frames) into every later query's measurement — r3-r5 each
         // recorded multi-x phantom regressions on alphabetically-late
-        // queries from exactly this. Release every pinned cache so each
-        // query is timed against a clean storage layer, like an
+        // queries from exactly this. Release every query-scoped pin so
+        // each query is timed against a clean storage layer, like an
         // isolated rerun.
-        queries.DedupQueries.releaseClusterCheckpoints()
-        queries.DedupQueries.releaseSemanticFrames()
-        queries.PipelineQueries.evictShingleCache()
-        similarity.Ann.releaseBucketedFrames()
-        text.MinHashLSH.releaseCachedFrames()
-        text.SimHash.releaseCachedFrames()
+        Memo.releaseQuery()
         spark.catalog.clearCache()
         // the releases unpersist non-blocking; give the block manager a
         // beat and compact the heap so the NEXT query's timer doesn't

@@ -77,14 +77,11 @@ object SplitEvidence {
             org.apache.spark.sql.functions.lit(1)).as("n"))
       // partitions actually planned at this split.size (separate
       // instance; never executed)
-      val parts = {
-        val prev = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try df().queryExecution.executedPlan.collectFirst {
+      val parts = Conf.scoped(spark, "spark.sql.adaptive.enabled" -> "false") {
+        df().queryExecution.executedPlan.collectFirst {
           case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
             b.scan.toBatch.planInputPartitions().length
         }.getOrElse(-1)
-        finally spark.conf.set("spark.sql.adaptive.enabled", prev)
       }
       val times = (0 until 2).map { _ =>
         val t0 = System.nanoTime()

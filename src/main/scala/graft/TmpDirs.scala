@@ -152,20 +152,4 @@ object TmpDirs {
     java.nio.file.Files.createDirectories(d)
     d.toString
   }
-
-  /** Last-writer-wins memo for fixed-path staged fixtures — the ONE
-    * home of the eviction discipline every [[fixed]]-backed stage
-    * needs (dpp warehouse, eval scores, …): a request under a
-    * DIFFERENT key (new sfDir or session) evicts the whole memo and
-    * re-stages, because the staged path is name-only and a stale memo
-    * would silently serve the previous corpus' files. Synchronized on
-    * the map so a concurrent caller can't observe the window between
-    * clear and restage. */
-  def stagedMemo[K, V](memo: java.util.concurrent.ConcurrentHashMap[K, V],
-      key: K)(build: K => V): V =
-    memo.synchronized {
-      if (!memo.containsKey(key) && !memo.isEmpty)
-        memo.clear() // key switch: force a re-stage
-      memo.computeIfAbsent(key, k => build(k))
-    }
 }

@@ -64,12 +64,9 @@ object PageRank {
     // plans/r22/q_graph_pagerank_iteration_after.txt iteration 1).
     // Off for the loop, restored after; measured −0.9 s at sf0.1
     // (isolated 4.2-4.8 → 3.3-3.7 s band).
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val aqePrev = spark.conf.get(aqeKey)
-    spark.conf.set(aqeKey, "false")
-    try {
+    graft.Conf.scoped(spark, "spark.sql.adaptive.enabled" -> "false") {
       runLoop(spark, edges, iters, damping)
-    } finally spark.conf.set(aqeKey, aqePrev)
+    }
   }
 
   private def runLoop(spark: SparkSession, edges: DataFrame, iters: Int,

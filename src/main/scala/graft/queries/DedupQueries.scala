@@ -185,22 +185,14 @@ object DedupQueries {
   /** Lock serializing getPersistentRDDs-diff checkpoint tracking. */
   private[queries] val checkpointLock = new Object
 
-  // final-round label blocks of every dedupClusters call, pinned until
-  // the caller is done with the results (the same long-lived-session
-  // concern evictShingleCache addresses for the shingle frames)
-  private val retainedClusterBlocks =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
+  // final-round label blocks of every dedupClusters call: query-scoped
+  // (graft.Memo), pinned until the caller is done with the results
+  private val retainedClusterBlocks = graft.Memo.blocks()
 
   /** Unpersist the final-round label blocks retained by prior
     * [[dedupClusters]] calls. Call ONLY after those results are fully
     * consumed — their lineage is truncated and cannot recompute. */
-  def releaseClusterCheckpoints(): Unit = {
-    var r = retainedClusterBlocks.poll()
-    while (r != null) {
-      r.unpersist(blocking = false)
-      r = retainedClusterBlocks.poll()
-    }
-  }
+  def releaseClusterCheckpoints(): Unit = retainedClusterBlocks.release()
 
   val dedupClustersSql: String = {
     // transitive closure over the SAME exact-Jaccard pairs; cluster =
@@ -231,12 +223,10 @@ object DedupQueries {
       minCos = 0.35, nCentroids = 16)
   }
 
-  // SemDeDup coarse fit memoized per sfDir: bit-deterministic (see
+  // SemDeDup coarse fit, staged (graft.Memo): bit-deterministic (see
   // Kmeans scaladoc), and Bench's min-of-2 would otherwise pay the
-  // 8-iteration fit twice. Bounded: one entry per scale dir swept in
-  // this JVM (same lifecycle note as the distillation-fit memo).
-  private val semanticModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.similarity.Kmeans.Model]()
+  // 8-iteration fit twice.
+  private val semanticModel = graft.Memo.staged[graft.similarity.Kmeans.Model]()
 
   /** SemDeDup — the published semantic-dedup composition (Abbas et
     * al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -259,7 +249,7 @@ object DedupQueries {
   def dedupSemantic(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val emb = Fixtures.embeddings(spark, sfDir).select($"vec_id", $"embedding")
-    val model = semanticModelCache.computeIfAbsent(sfDir,
+    val model = semanticModel(spark, sfDir)(
       _ => graft.similarity.Kmeans.fit(emb, k = 16, iters = 8))
     semanticDedup(emb, model, tau = 0.35)
       .groupBy($"cluster")
@@ -268,6 +258,10 @@ object DedupQueries {
         sum(when($"dropped", 1L).otherwise(0L)).as("n_dropped"))
       .orderBy($"cluster")
   }
+
+  // assignment frames pinned by semanticDedup (4 consumers: the salt
+  // scan, both join sides, the verdict join): query-scoped (graft.Memo)
+  private val retainedSemantic = graft.Memo.frames()
 
   /** The keep/drop frame behind [[dedupSemantic]], shared with the
     * spec's planted-corpus laws: (cluster, vec_id, dropped).
@@ -281,19 +275,6 @@ object DedupQueries {
     * changes NOTHING about which pairs are compared (each same-cluster
     * pair meets in exactly one salt group), only bounds any single
     * task's left group at ~cap rows. */
-  // assignment frames pinned by semanticDedup (4 consumers: the salt
-  // scan, both join sides, the verdict join), registered for release —
-  // same pattern as Ann.releaseBucketedFrames
-  private val retainedSemantic =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every assignment frame semanticDedup pinned (Bench
-    * calls this between queries; long-lived sessions when done). */
-  def releaseSemanticFrames(): Unit = {
-    retainedSemantic.forEach(df => df.unpersist(blocking = false))
-    retainedSemantic.clear()
-  }
-
   private[graft] def semanticDedup(emb: DataFrame,
       model: graft.similarity.Kmeans.Model, tau: Double,
       clusterCap: Int = 100000): DataFrame = {

@@ -313,55 +313,25 @@ object JoinQueries {
       |FROM l JOIN r ON l.k = r.k
       |GROUP BY l.k, r.attr ORDER BY l.k""".stripMargin
 
-  /** Bucketed co-located join surfaced as a query: both sides are
-    * written `bucketBy(8, orderkey)` + sorted, and the join + same-key
-    * aggregation then run with ZERO shuffle Exchanges (asserted here
-    * at execution, not just in BucketingSpec) — the pre-partitioning
-    * strategy a 100 TB star schema uses so its hot join pays its
-    * shuffle once at write time, never per query. Broadcast is
-    * disabled for the duration so the plan exercises the bucketed
-    * sort-merge path (at real scale neither side broadcasts anyway);
-    * executed eagerly so the conf toggle and plan assertion stay
-    * inside this call. The DuckDB oracle runs the plain join — the
-    * hash match proves bucketing is pure layout, zero semantics. */
-  // one bucketed warehouse per (session, sfDir): the bucketed tables
+  // one bucketed warehouse, staged (graft.Memo): the bucketed tables
   // are pure LAYOUT — writing them is the once-at-ingest shuffle a
   // 100 TB star schema pays at write time, never per query. Without
   // memoization every joinBucketed call (bench, verify, repeated
   // notebook use) re-paid both bucketed writes, ~90% of the measured
-  // time; now only the first call per JVM writes, and the bench
-  // measures the zero-Exchange join itself.
-  private val bucketedWarehouse =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  // time; now only the first call per (session, sfDir) writes, and the
+  // bench measures the zero-Exchange join itself. A key switch drops
+  // the previous tables (their files are TmpDirs-swept at exit).
+  private val bucketedWarehouse = graft.Memo.staged[String] { case ((s, _), sfx) =>
+    s.sql(s"DROP TABLE IF EXISTS graft_bktq_orders_$sfx")
+    s.sql(s"DROP TABLE IF EXISTS graft_bktq_lineitem_$sfx")
+  }
 
   /** Returns the table-name suffix for this (session, sfDir)'s bucketed
     * tables, writing them on first use. Distinct sfDirs get distinct
-    * table names so two scale factors in one JVM never clobber each
-    * other's layout. */
-  /** Drop the memoized bucketed tables and forget every entry. The
-    * per-round harness never needs this (the JVM exits); a long-lived
-    * session embedding the library calls it after regenerating fixture
-    * data under a memoized sfDir, or to release stopped sessions the
-    * map would otherwise retain. */
-  def evictBucketedWarehouse(): Unit = {
-    val it = bucketedWarehouse.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val s = e.getKey._1
-      try {
-        s.sql(s"DROP TABLE IF EXISTS graft_bktq_orders_${e.getValue}")
-        s.sql(s"DROP TABLE IF EXISTS graft_bktq_lineitem_${e.getValue}")
-      } catch { case _: Exception => () } // stopped session: nothing to drop
-    }
-    bucketedWarehouse.clear()
-    // the DPP layout memo has the same lifecycle hazards (stale layout
-    // after fixture regeneration, stopped sessions pinned in the map);
-    // its staging dirs are TmpDirs-swept, so forgetting them suffices
-    dppWarehouse.clear()
-  }
-
+    * table names so a stale layout is never mistaken for another
+    * scale factor's. */
   private def ensureBucketedTables(spark: SparkSession, sfDir: String): String =
-    bucketedWarehouse.computeIfAbsent((spark, sfDir), { case (s, d) =>
+    bucketedWarehouse(spark, sfDir) { case (s, d) =>
       // MD5 of the full path: hashCode alone can collide across two
       // sfDirs in one JVM, silently serving one dataset for both
       val sfx = java.security.MessageDigest.getInstance("MD5")
@@ -379,15 +349,23 @@ object JoinQueries {
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(s"graft_bktq_lineitem_$sfx")
       sfx
-    })
+    }
 
+  /** Bucketed co-located join surfaced as a query: both sides are
+    * written `bucketBy(8, orderkey)` + sorted, and the join + same-key
+    * aggregation then run with ZERO shuffle Exchanges (asserted here
+    * at execution, not just in BucketingSpec) — the pre-partitioning
+    * strategy a 100 TB star schema uses so its hot join pays its
+    * shuffle once at write time, never per query. Broadcast is
+    * disabled for the duration so the plan exercises the bucketed
+    * sort-merge path (at real scale neither side broadcasts anyway);
+    * executed eagerly so the conf toggle and plan assertion stay
+    * inside this call. The DuckDB oracle runs the plain join — the
+    * hash match proves bucketing is pure layout, zero semantics. */
   def joinBucketed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val sfx = ensureBucketedTables(spark, sfDir)
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    graft.Conf.scoped(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val perOrder = spark.table(s"graft_bktq_orders_$sfx")
         .join(spark.table(s"graft_bktq_lineitem_$sfx"),
           $"o_orderkey" === $"l_orderkey")
@@ -403,7 +381,7 @@ object JoinQueries {
         .orderBy($"o_orderstatus")
         .as[(String, Long, Double)].collect().toSeq
       rows.toDF("o_orderstatus", "n_orders", "sum_qty")
-    } finally spark.conf.set(key, prev)
+    }
   }
 
   val joinBucketedSql: String =
@@ -417,23 +395,19 @@ object JoinQueries {
       |  GROUP BY o_orderkey, o_orderstatus)
       |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
-  private val dppWarehouse =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val dppWarehouse = graft.Memo.staged[String]()
 
   /** Stage the date-partitioned fact layout + a parquet dim table at
     * the FIXED `dpp` staging path (survives JVM exit:
     * q_scan_inventory's DuckDB twin re-reads these very footers in a
-    * later process). Memoized per (session, sfDir) like the bucketed
-    * warehouse, BUT the path is name-only, so a request for a
-    * DIFFERENT sfDir in the same JVM evicts the memo and RE-STAGES —
-    * last-writer-wins, the standard fixed-path ordering contract;
-    * without the eviction a second sfDir would silently read the
-    * first one's files. The dim is WRITTEN AND READ BACK on purpose:
-    * a literal local dim gets its selective filter constant-folded
-    * into the LocalRelation and DPP never fires (the
-    * RuntimeFilterSpec lesson). */
+    * later process). Staged like the bucketed warehouse: the path is
+    * name-only, so a request for a DIFFERENT sfDir must RE-STAGE —
+    * last-writer-wins, the standard fixed-path ordering contract. The
+    * dim is WRITTEN AND READ BACK on purpose: a literal local dim gets
+    * its selective filter constant-folded into the LocalRelation and
+    * DPP never fires (the RuntimeFilterSpec lesson). */
   private[queries] def ensureDppLayout(spark: SparkSession, sfDir: String): String =
-    graft.TmpDirs.stagedMemo(dppWarehouse, (spark, sfDir)) { case (s, d) =>
+    dppWarehouse(spark, sfDir) { case (s, d) =>
       val base = graft.TmpDirs.fixed("dpp")
       Fixtures.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))

@@ -22,13 +22,13 @@ object MultimodalQueries {
   // timing per-call synthesis (ImageIO ENCODING the fixtures) would
   // overstate the decode queries ~2× (same reasoning as the bucketed
   // warehouse memoization in JoinQueries). Distributed generate, one
-  // write, swept at JVM exit.
+  // write, swept at JVM exit. Staged (graft.Memo), one memo per modality.
   private val payloadDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+    Seq("png", "avi", "wav", "phash").map(_ -> graft.Memo.staged[String]()).toMap
   private def stagedPayloads(spark: SparkSession, sfDir: String,
       kind: String)(gen: Long => Array[Byte]) = {
     import spark.implicits._
-    val dir = payloadDirs.computeIfAbsent((sfDir, kind), _ => {
+    val dir = payloadDirs(kind)(spark, sfDir) { _ =>
       val d = graft.TmpDirs.create(s"graft_mm_$kind")
       Fixtures.documents(spark, sfDir)
         .select($"doc_id").as[Long]
@@ -36,7 +36,7 @@ object MultimodalQueries {
         .toDF("doc_id", "payload")
         .write.mode("overwrite").parquet(d)
       d
-    })
+    }
     spark.read.parquet(dir).as[(Long, Array[Byte])]
   }
 

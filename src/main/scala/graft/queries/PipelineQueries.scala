@@ -80,35 +80,30 @@ object PipelineQueries {
     * standard stop-shingle trick for near-dup mining at corpus scale. */
   val NgramDfCap = 100
 
+  // one cached shingle universe per (session, sfDir), query-scoped
+  // (graft.Memo): dedupNgram and dedupMinhash both consume it — without
+  // memoization each call would cache its own identical copy and
+  // recompute the shingling. Values hold BOTH cached frames (kept join
+  // + raw exploded) so release can unpersist everything the build pinned.
+  private val shingleCache = graft.Memo.query[(DataFrame, DataFrame)] {
+    case (kept, ex) =>
+      kept.unpersist(blocking = false)
+      ex.unpersist(blocking = false)
+  }
+
   /** (doc_id, shingle) rows: distinct word trigrams per doc, with
     * boilerplate shingles (df > NgramDfCap) dropped — the shared
     * shingle universe of the exact-Jaccard oracle AND the MinHash-LSH
     * path (graft.text.MinHashLSH), so LSH recall is measured against
     * the identical definition. Cached: reused 3× within dedupNgram and
     * again by the LSH query. */
-  // one cached shingle universe per (session, sfDir): dedupNgram and
-  // dedupMinhash both consume it — without memoization each call would
-  // cache its own identical copy and recompute the shingling. Values
-  // hold BOTH cached frames (kept join + raw exploded) so eviction can
-  // unpersist everything the build pinned.
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, DataFrame)]()
-
   def keptShingles(spark: SparkSession, sfDir: String): DataFrame =
-    shingleCache.computeIfAbsent((spark, sfDir), { case (s, d) => buildKeptShingles(s, d) })._1
+    shingleCache(spark, sfDir) { case (s, d) => buildKeptShingles(s, d) }._1
 
-  /** Unpersist and drop every memoized shingle universe. The per-round
-    * harness never needs this (the JVM exits); a long-lived session
-    * embedding the library calls it when done with dedup queries. */
-  def evictShingleCache(): Unit = {
-    val it = shingleCache.values().iterator()
-    while (it.hasNext) {
-      val (kept, ex) = it.next()
-      kept.unpersist(blocking = false)
-      ex.unpersist(blocking = false)
-    }
-    shingleCache.clear()
-  }
+  /** Unpersist and drop every memoized shingle universe
+    * ([[graft.Memo.releaseQuery]] frees these along with every other
+    * query-scoped pin). */
+  def evictShingleCache(): Unit = shingleCache.release()
 
   private def buildKeptShingles(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
     import spark.implicits._

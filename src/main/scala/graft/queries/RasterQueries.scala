@@ -50,7 +50,7 @@ object RasterQueries {
 
   private[graft] def pyramidRollup(spark: SparkSession, sfDir: String,
       kernel: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       pyramidRollupBody(spark, sfDir, kernel)
     }
 
@@ -125,7 +125,7 @@ object RasterQueries {
     * the reference's parts_info table (ccog/ccog.py:717-773). */
   def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame =
     // size-to-grid shuffle partitions, same rationale as mosaic_write
-    WindowQueries.withShufflePartitions(spark, 8) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       rasterAssembleBody(spark, sfDir)
     }
 
@@ -152,7 +152,7 @@ object RasterQueries {
     * the local multipart sink; returns the file's structural fingerprint
     * (deflate is deterministic, so sha256 is a golden). */
   def cogWriteBytes(spark: SparkSession, sfDir: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       cogWriteBytesBody(spark, sfDir)
     }
 
@@ -274,7 +274,7 @@ object RasterQueries {
     * columns), then the new file is read back and rolled up with the
     * same per-level invariant as the read queries. */
   def rasterDsv2Write(spark: SparkSession, sfDir: String): DataFrame =
-    WindowQueries.withShufflePartitions(spark, 8) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       rasterDsv2WriteBody(spark, sfDir)
     }
 
@@ -403,11 +403,11 @@ object RasterQueries {
     // and stats agg inside each region's CogWriter job otherwise fan
     // 48-tile regions across 32 near-empty tasks) — the same
     // size-to-volume discipline as the streaming demos and PageRank
-    WindowQueries.withShufflePartitions(spark, 8) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       rasterMosaicWriteBody(spark, sfDir)
     }
 
-  // the mosaic-write INPUT staged once per (session, sfDir) as parquet:
+  // the mosaic-write INPUT staged (graft.Memo) as parquet:
   // each region sub-write re-filters its source on purpose (at 100 TB
   // that re-scan is a pruned parquet/cog read — the right trade), and
   // staging gives the generated frame real storage to prune against,
@@ -415,11 +415,10 @@ object RasterQueries {
   // read instead of a generator re-run. Same convention as the other
   // staged fixtures: the first invocation pays staging, min-of-2
   // measures the WRITE — which is the operator under test.
-  private val mosaicInputStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val mosaicInputStage = graft.Memo.staged[String]()
 
   private def ensureMosaicInput(spark: SparkSession, sfDir: String): String =
-    graft.TmpDirs.stagedMemo(mosaicInputStage, (spark, sfDir)) { case (s, d) =>
+    mosaicInputStage(spark, sfDir) { case (s, d) =>
       val dir = graft.TmpDirs.create("graft-qmwrite-in")
       val e = edge(d)
       val prof = RasterProfile(e, e * 3 / 4, blockSize = 128, nodata = ND,

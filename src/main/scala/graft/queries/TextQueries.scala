@@ -79,12 +79,11 @@ object TextQueries {
     * re-derives the confusion rollup from the identical bytes, so the
     * dump/rollup leg is cross-engine while LangIdSpec keeps owning the
     * classifier itself. */
-  private val langidStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val langidStage = graft.Memo.staged[String]()
 
   private[graft] def ensureLangidPredictions(spark: SparkSession,
       sfDir: String): String =
-    graft.TmpDirs.stagedMemo(langidStage, (spark, sfDir)) { case (s, d) =>
+    langidStage(spark, sfDir) { case (s, d) =>
       import s.implicits._
       val base = graft.TmpDirs.fixed("langid")
       Fixtures.documents(s, d)
@@ -481,17 +480,11 @@ object TextQueries {
     * call three BPE consumers against the same corpus. */
   val BpeMerges = 512
 
-  // Bounded: one entry per (session, scale dir) this JVM sweeps —
-  // normally ≤3. The guard below keeps a pathological long-lived
-  // session (many sfDirs) from accumulating tables and their broadcast
-  // refs without bound; eviction just means the next caller refits.
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Bpe.Table]()
-  private val MemoCap = 16
+  // staged (graft.Memo): one table at a time; a new corpus refits
+  private val bpeMemo = graft.Memo.staged[Bpe.Table]()
 
-  def bpeTable(spark: SparkSession, sfDir: String): Bpe.Table = {
-    if (bpeMemo.size > MemoCap) bpeMemo.clear()
-    bpeMemo.computeIfAbsent((spark, sfDir), { _ =>
+  def bpeTable(spark: SparkSession, sfDir: String): Bpe.Table =
+    bpeMemo(spark, sfDir) { _ =>
       import spark.implicits._
       val histogram = Fixtures.documents(spark, sfDir)
         .select($"text").as[String]
@@ -502,8 +495,7 @@ object TextQueries {
         .limit(Bpe.MaxTrainWords)
         .as[(String, Long)].collect().toMap
       Bpe.train(histogram, BpeMerges)
-    })
-  }
+    }
 
   /** Per-doc REAL BPE token counts next to the whitespace estimate —
     * the budget correction the packer and mixer consume. Encoding is a
@@ -805,13 +797,12 @@ object TextQueries {
   }
 
   // staged .warc.gz files for the DSv2 source — one file per shard,
-  // written from executors, memoized per (session, sfDir); TmpDirs
+  // written from executors, staged (graft.Memo); TmpDirs
   // sweeps the directory at JVM exit (engine-only: no oracle reads it)
-  private val warcStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  private val warcStage = graft.Memo.staged[String]()
 
   private[graft] def ensureWarcShards(spark: SparkSession, sfDir: String): String =
-    graft.TmpDirs.stagedMemo(warcStage, (spark, sfDir)) { case (s, d) =>
+    warcStage(spark, sfDir) { case (s, d) =>
       val dir = graft.TmpDirs.create("warc_shards")
       // ship the SESSION Hadoop conf (a bare Configuration drops s3a
       // credentials / custom filesystems on executor-side writes)
@@ -854,14 +845,13 @@ object TextQueries {
       .orderBy($"host")
   }
 
-  // staged rows of the manifest-joined DSv2 scan, memoized per
-  // (session, sfDir); the DuckDB twin re-reads the same bytes
-  private val warcManifestStage =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
+  // staged rows of the manifest-joined DSv2 scan (graft.Memo); the
+  // DuckDB twin re-reads the same bytes
+  private val warcManifestStage = graft.Memo.staged[String]()
 
   private[graft] def ensureWarcManifestRows(spark: SparkSession,
       sfDir: String): String =
-    graft.TmpDirs.stagedMemo(warcManifestStage, (spark, sfDir)) { case (s, d) =>
+    warcManifestStage(spark, sfDir) { case (s, d) =>
       import s.implicits._
       val dir = ensureWarcShards(s, d)
       val dp = new org.apache.hadoop.fs.Path(dir)
@@ -948,7 +938,7 @@ object TextQueries {
     // the wrapper must cover the WHOLE run (micro-batches plan during
     // processAllAvailable, not at start()) — the sibling streaming
     // queries' discipline
-    WindowQueries.withShufflePartitions(spark, 4) {
+    graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "4") {
       val q = mem.toDF().toDF("doc_id", "source", "text")
         .writeStream
         .foreachBatch(graft.streaming.WarcStreamIngest.stageBatch(dir) _)

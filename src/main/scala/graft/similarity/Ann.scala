@@ -180,10 +180,9 @@ object Ann {
     * RIGHT side replicates each member to all S salts. Every
     * same-bucket pair therefore meets in exactly one salt group, in
     * both orientations, exactly as in the unsalted join. cache(): the
-    * size scan + both sides read the bucketed frame; registered for
-    * release so a long-lived session can return the storage (same
-    * pattern as the CC label blocks). Package-visible so EmbedIvfSpec
-    * can assert the split structure directly. */
+    * size scan + both sides read the bucketed frame; pinned in query
+    * scope ([[graft.Memo.releaseQuery]] frees it). Package-visible so
+    * EmbedIvfSpec can assert the split structure directly. */
   private[similarity] def saltedSides(emb: DataFrame, nCentroids: Int,
       nProbe: Int, bucketCap: Int): (DataFrame, DataFrame) = {
     val spark = emb.sparkSession
@@ -215,22 +214,9 @@ object Ann {
     (a, b)
   }
 
-  // bucketed frames pinned by ivfNearDupPairs calls, released once the
-  // caller is done with the results (the same long-lived-session
-  // registry pattern as DedupQueries.retainedClusterBlocks)
-  private val retainedBucketFrames =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  /** Unpersist the bucketed frames cached by prior [[ivfNearDupPairs]]
-    * calls. Lineage is intact (plain cache), so this is safe at any
-    * point; results consumed later just recompute. */
-  def releaseBucketedFrames(): Unit = {
-    var f = retainedBucketFrames.poll()
-    while (f != null) {
-      f.unpersist(blocking = false)
-      f = retainedBucketFrames.poll()
-    }
-  }
+  // bucketed frames pinned by ivfNearDupPairs calls: query-scoped
+  // (graft.Memo), plain cache so release is safe at any point
+  private val retainedBucketFrames = graft.Memo.frames()
 
   /** Top-k probed-bucket neighbors for each query id.
     * `emb`: (vec_id: Long, embedding: Array[Float]). Queries are rows

@@ -71,6 +71,13 @@ object MinHashLSH {
     h
   }
 
+  // cached frames pinned by nearDupPairs: query-scoped (graft.Memo)
+  private val retained = graft.Memo.frames()
+
+  /** Unpersist every frame nearDupPairs pinned ([[graft.Memo.releaseQuery]]
+    * frees these along with every other query-scoped pin). */
+  def releaseCachedFrames(): Unit = retained.release()
+
   /** Candidate pairs + exact-verified Jaccard over a (doc_id, shingle)
     * universe. Output: (id_a, id_b, jaccard) with J >= `threshold`,
     * id_a < id_b — a subset of the exact join's pairs (identical
@@ -81,20 +88,6 @@ object MinHashLSH {
     * (band, key), distinct, then two small joins back to the sets for
     * exact verification. Every shuffle is keyed — nothing quadratic in
     * corpus size. */
-  // cached frames pinned by nearDupPairs, registered for release so a
-  // long-lived session can return the storage (same pattern as
-  // similarity.Ann.releaseBucketedFrames)
-  private val retained =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every frame nearDupPairs pinned. Per-round harnesses
-    * never need this (the JVM exits); long-lived sessions call it when
-    * done with dedup. */
-  def releaseCachedFrames(): Unit = {
-    retained.forEach(df => df.unpersist(blocking = false))
-    retained.clear()
-  }
-
   def nearDupPairs(shingles: DataFrame, threshold: Double): DataFrame = {
     val spark = shingles.sparkSession
     import spark.implicits._

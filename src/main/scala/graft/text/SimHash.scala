@@ -62,16 +62,8 @@ object SimHash {
   def bandKey(pairIdx: Int, cvI: Int, cvJ: Int): Long =
     (pairIdx.toLong << 26) | (cvI.toLong << 13) | cvJ.toLong
 
-  // cached fingerprint frames, registered for release (same pattern as
-  // MinHashLSH.releaseCachedFrames / Ann.releaseBucketedFrames)
-  private val retained =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[DataFrame]())
-
-  /** Unpersist every frame nearDupPairs pinned (long-lived sessions). */
-  def releaseCachedFrames(): Unit = {
-    retained.forEach(df => df.unpersist(blocking = false))
-    retained.clear()
-  }
+  // cached fingerprint frames: query-scoped (graft.Memo)
+  private val retained = graft.Memo.frames()
 
   /** All pairs with Hamming(fp) <= MaxDist over (doc_id, tokens) rows.
     * Output (id_a, id_b, hamming), id_a < id_b, totally ordered. */

@@ -127,19 +127,19 @@ class EmbedIvfSpec extends SparkSpec {
     }
     val recall = got.count { case (a, b, _) => truth.contains((a, b)) }.toDouble / truth.size
     assert(recall >= 0.9, s"capped recall $recall over ${truth.size} true pairs")
-    Ann.releaseBucketedFrames()
+    graft.Memo.releaseQuery()
   }
 
-  test("releaseBucketedFrames returns the pinned storage to zero") {
+  test("Memo.releaseQuery returns the pinned bucket storage to zero") {
     val s = spark
     import s.implicits._
     val sc = s.sparkContext
-    Ann.releaseBucketedFrames() // drain anything earlier tests pinned
+    graft.Memo.releaseQuery() // drain anything earlier tests pinned
     val before = sc.getPersistentRDDs.size
     val df = planted.toDF("vec_id", "embedding")
     Ann.ivfNearDupPairs(df, minCos = 0.9, nCentroids = 20).count()
     assert(sc.getPersistentRDDs.size > before, "expected pinned bucket frame")
-    Ann.releaseBucketedFrames()
+    graft.Memo.releaseQuery()
     assert(sc.getPersistentRDDs.size == before, "bucket frames not released")
   }
 
