@@ -120,7 +120,7 @@ object RasterQueries {
       .orderBy($"ty", $"tx")
   }
 
-  /** Encode + distributed prefix-sum placement WITHOUT the sink: the
+  /** Encode + prefix-sum placement (Offsets) WITHOUT the sink: the
     * (level, ty, tx, offset, nbytes) plan rows, file-ordered — directly
     * the reference's parts_info table (ccog/ccog.py:717-773). */
   def rasterAssemble(spark: SparkSession, sfDir: String): DataFrame =
@@ -399,9 +399,9 @@ object RasterQueries {
     * files, and appends carry explicit geometry because inference
     * would clip to the partial extent (CogWriteSupport scaladoc). */
   def rasterMosaicWrite(spark: SparkSession, sfDir: String): DataFrame =
-    // shuffle partitions sized to the tile grid (the prefix-sum sort
-    // and stats agg inside each region's CogWriter job otherwise fan
-    // 48-tile regions across 32 near-empty tasks) — the same
+    // shuffle partitions sized to the tile grid (the pyramid and
+    // part-packing shuffles inside each region's CogWriter job otherwise
+    // fan 48-tile regions across 32 near-empty tasks) — the same
     // size-to-volume discipline as the streaming demos and PageRank
     graft.Conf.scoped(spark, "spark.sql.shuffle.partitions" -> "8") {
       rasterMosaicWriteBody(spark, sfDir)

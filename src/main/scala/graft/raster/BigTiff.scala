@@ -20,7 +20,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   *
   * Crucially `headerLength(profile)` depends only on the grid structure,
   * never on tile contents — so absolute tile offsets can be assigned by
-  * the distributed prefix-sum BEFORE the header bytes exist. Tile DATA
+  * the offsets prefix-sum (Offsets) BEFORE the header bytes exist. Tile DATA
   * in the file body is ordered (level desc, ty, tx, page) exactly like
   * the reference's ordered flatten (ccog/ccog.py:665,747; data and mask
   * tiles adjacent per tile, ccog/ccog.py:409-422).

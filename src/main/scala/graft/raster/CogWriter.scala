@@ -7,14 +7,17 @@ import graft.sink.{Blob, LocalMultipartSink, MultipartSink, OrderedMultipartWrit
   * public API, `write_ccog` (reference ccog/ccog.py:801-971):
   *
   *   pyramid (level loop, persist per level, SURVEY §4.1)
-  *   → per-tile encode (narrow map, fused stats partials)
-  *   → distributed prefix-sum offsets (Offsets, R25)
+  *   → per-tile encode (narrow map, fused stats partials), persisted
+  *   → prefix-sum offsets and band stats on the driver from the
+  *     collected tile metadata (Offsets, R25)
   *   → driver header emit (BigTiff, R22 — offset/count metadata is
   *     grid×16 B, tiny relative to pixel data)
   *   → ordered multipart sink (OrderedMultipartWriter, R28/R36).
   *
-  * One shuffle per pyramid level + one range shuffle for placement +
-  * one for packing; pixel bytes cross the wire once after encode.
+  * Shuffles: one per pyramid level (plus the halo exchange's for wide
+  * kernels, which ships every tile whole) and one hash shuffle into
+  * parts. Each tile is deflated once, and its encoded bytes cross the
+  * wire once.
   */
 object CogWriter {
 
@@ -64,79 +67,50 @@ object CogWriter {
       })
       .reduce(_ union _)
 
-    // 3. absolute offsets via distributed prefix sum
+    // 3. encode once (persisted); absolute offsets via a driver-side
+    // prefix sum over the collected tile metadata
     val headerLen = BigTiff.headerLength(profile)
     val placement = Offsets.place(encoded, headerLen)
 
     try {
-      // 4. per-page offset/count arrays for the header + size metrics.
-      // Metadata only (bytes column never collected): grid cells × ~24 B.
-      val meta = placement.placed
-        .map(p => (p.level, p.ty, p.tx, p.page, p.offset, p.nbytes))
-        .collect()
+      // 4. per-page offset/count arrays for the header + size metrics,
+      // from the placement's driver-side metadata (grid cells × ~100 B)
+      val meta = placement.meta
       val nTiles = meta.length.toLong
-      val nSparse = meta.count(_._6 == 0).toLong
-      val tileBytes = meta.map(_._6.toLong).sum
-      val maxTile = if (meta.isEmpty) 0L else meta.map(_._6.toLong).max
+      val nSparse = meta.count(_.nbytes == 0).toLong
+      val tileBytes = meta.map(_.nbytes.toLong).sum
+      val maxTile = meta.map(_.nbytes.toLong).maxOption.getOrElse(0L)
       val nLevels = profile.maxLevel + 1
       val pages = BigTiff.pageSpecs(profile)
-      val byPage = meta.groupBy(m => (m._1, if (m._4 == TileCodec.PageMask) true else false))
+      val pageOf = pages.zipWithIndex.map { case (pg, i) => (pg.level, pg.isMask) -> i }.toMap
+      val offsets = pages.map(pg => new Array[Long](profile.tilesPerLevel(pg.level)))
+      val counts = pages.map(pg => new Array[Long](profile.tilesPerLevel(pg.level)))
       // ghost layout: stored bytes are leader(4)+payload+trailer(4);
       // TileOffsets point at the payload, TileByteCounts exclude the
       // decoration (GDAL convention; reference ccog/ccog.py:430-441)
       val ghostPad = if (profile.ghost) 4L else 0L
-      val offsets = pages.map { pg =>
-        val (gw, _) = profile.gridDims(pg.level)
-        val arr = new Array[Long](profile.tilesPerLevel(pg.level))
-        byPage.getOrElse((pg.level, pg.isMask), Array.empty).foreach {
-          case (_, ty, tx, _, off, n) =>
-            arr(ty * gw + tx) = if (n == 0) 0L else off + ghostPad
-        }
-        arr
-      }
-      val counts = pages.map { pg =>
-        val (gw, _) = profile.gridDims(pg.level)
-        val arr = new Array[Long](profile.tilesPerLevel(pg.level))
-        byPage.getOrElse((pg.level, pg.isMask), Array.empty).foreach {
-          case (_, ty, tx, _, _, n) =>
-            arr(ty * gw + tx) = if (n == 0) 0L else n.toLong - 2 * ghostPad
-        }
-        arr
+      for (i <- meta.indices; m = meta(i) if m.nbytes > 0;
+           p <- pageOf.get((m.level, m.page == TileCodec.PageMask))) {
+        val cell = m.ty * profile.gridDims(m.level)._1 + m.tx
+        offsets(p)(cell) = placement.offsets(i) + ghostPad
+        counts(p)(cell) = m.nbytes.toLong - 2 * ghostPad
       }
 
       // 5. masked PER-BAND stats from the fused encode partials — no
       // second pass over pixels (reference pays a full extra pass,
       // ccog/ccog.py:38,511-541)
-      // per-tile partials are deterministic (fixed row-major loops);
-      // the CROSS-TILE reduction must be too — double sums are
-      // order-dependent at the last ulp, which would leak into the
-      // fixed-width header stats and make the assembled bytes vary
-      // between runs. DECIMAL accumulation is exact, hence
-      // order-independent.
-      import org.apache.spark.sql.functions.{sum => fsum, min => fmin, max => fmax, when => fwhen, col}
-      val statsRows = placement.cached
-        .filter(e => e.level == 0 && e.page == TileCodec.PageData)
-        .flatMap(e => e.bandValid.indices.map(b =>
-          (b, e.pxTotal, e.bandValid(b), e.bandSum(b), e.bandSumSq(b),
-            e.bandMin(b), e.bandMax(b))))
-        .toDF("band", "total", "valid", "s", "ss", "mn", "mx")
-        .groupBy(col("band"))
-        .agg(fsum(col("total")), fsum(col("valid")),
-          fsum(col("s").cast("decimal(38,12)")).cast("double"),
-          fsum(col("ss").cast("decimal(38,12)")).cast("double"),
-          fmin(fwhen(col("valid") > 0, col("mn"))),
-          fmax(fwhen(col("valid") > 0, col("mx"))))
-        .orderBy(col("band"))
-        .collect()
-      val stats = statsRows.toSeq.map { r =>
-        val total = r.getLong(1)
-        val valid = r.getLong(2)
+      val l0 = meta.filter(e => e.level == 0 && e.page == TileCodec.PageData)
+      val total = l0.map(_.pxTotal).sum
+      val stats = (0 until l0.headOption.fold(0)(_.bandValid.length)).map { b =>
+        val withData = l0.filter(_.bandValid(b) > 0)
+        val valid = withData.map(_.bandValid(b)).sum
         if (valid == 0) BandStats(total, 0, 0, 0, 0, 0, 0)
         else {
-          val mean = r.getDouble(3) / valid
-          val varp = r.getDouble(4) / valid - mean * mean
+          val mean = exactSum(withData.map(_.bandSum(b))) / valid
+          val varp = exactSum(withData.map(_.bandSumSq(b))) / valid - mean * mean
           BandStats(total, valid, mean, math.sqrt(math.max(0, varp)),
-            r.getDouble(5), r.getDouble(6), 100.0 * valid / total)
+            withData.map(_.bandMin(b)).reduce((x, y) => math.min(x, y)),
+            withData.map(_.bandMax(b)).reduce((x, y) => math.max(x, y)), 100.0 * valid / total)
         }
       }
 
@@ -177,4 +151,16 @@ object CogWriter {
     val res = write(level0, profile, sink, partTarget = partTarget)
     (sink.assembled, res)
   }
+
+  /** Σ of per-tile double partials, each rounded HALF_UP to 12 decimals
+    * (as a decimal(38,12) cast does) and summed exactly: a double sum
+    * depends on tile order at the last ulp, which would leak into the
+    * header stats and make the file bytes vary between runs. Unbounded,
+    * so large float64 rasters cannot overflow it. Non-finite partials
+    * have no decimal form and propagate as in double arithmetic. */
+  private[raster] def exactSum(xs: Array[Double]): Double =
+    if (!xs.forall(x => java.lang.Double.isFinite(x))) xs.sum
+    else xs.foldLeft(java.math.BigDecimal.ZERO)((acc, x) => acc.add(
+      java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP)))
+      .doubleValue
 }

@@ -11,9 +11,9 @@ import org.apache.spark.sql.Dataset
   * Spark-first shape: a `flatMap` emits each tile once whole (to its own
   * key) plus up to 8 edge strips (each ≤ k·blockSize px, addressed to
   * the neighbor's key), and ONE `groupByKey` reassembles the padded
-  * tiles — a single shuffle whose payload is the strips only
-  * (≈ 8k/blockSize of the raster volume, e.g. 1.6% at k=2, bs=256),
-  * never a replication of whole tiles.
+  * tiles — a single shuffle whose payload is every tile whole (slot 4)
+  * plus the strips: ≈ (1 + 8k/blockSize) of the level's volume, e.g.
+  * 1.06× at k=2, bs=256.
   *
   * Raster-border sides have no neighbor: those padded cells stay
   * mask=0 and the kernel renormalizes over the weights that exist —

@@ -16,10 +16,11 @@ import org.apache.spark.storage.StorageLevel
   * `to_delayed(optimize_graph=False)` (ccog/ccog.py:618-621, SURVEY
   * §4.1); Spark expresses it as persist/unpersist.
   *
-  * Scale shape: the shuffle payload at level L+1 is 1/4 of level L's
-  * pixel volume, so total shuffle over the whole pyramid is bounded by
-  * 1/3 of the source volume regardless of depth — this holds unchanged
-  * on a 1000-executor cluster.
+  * Scale shape: the regroup shuffle at level L+1 carries 1/4 of level
+  * L's pixel volume, ≤ 1/3 of the source volume over the whole pyramid.
+  * Halo kernels add HaloExchange's padding shuffle, which ships each
+  * tile whole plus its edge strips: ≈ 4/3 · (1 + 8k/blockSize) of the
+  * source volume more. Both stay linear in the source at any depth.
   */
 object Pyramid {
 

@@ -48,7 +48,7 @@ object SyntheticRaster {
     * CPU-heavy codec (q_cog_write_bytes 3.2 s → 9.4 s measured).
     * Shuffle-side task-count overhead is handled where it belongs —
     * the write queries set spark.sql.shuffle.partitions to the grid
-    * scale around their prefix-sum/stats shuffles. */
+    * scale around their pyramid and part-packing shuffles. */
   def generate(spark: SparkSession, profile: RasterProfile, seed: Long,
       withMask: Boolean = true): Dataset[Tile] = {
     import spark.implicits._

@@ -154,16 +154,17 @@ class LocalMultipartSink(dir: String) extends ResumableMultipartSink {
   * S3-legal parts — replaces the reference's runtime pairwise merge
   * tree (reference ccog/aws_tools.py:181-245, R36/R37): sizes are known
   * post-encode, so partNumber is a pure function of byte offset and the
-  * plan is one range shuffle, no tree.
+  * plan is one hash shuffle, no tree.
   *
   * partNumber = offset/targetSize + 1. Blobs never split, so a part
   * holds every blob starting inside its window: size ∈
   * (target − maxBlob, target + maxBlob), and with
   * target ≥ 5 MiB + maxBlob every non-final part clears the S3 minimum
-  * (reference constraint table ccog/aws_tools.py:20-28). Equal
-  * partNumbers can't straddle a range-partition boundary (single-column
-  * range partitioning keeps equal keys together), so each part is
-  * uploaded exactly once, whole.
+  * (reference constraint table ccog/aws_tools.py:20-28). Hash
+  * partitioning on partNumber sends equal partNumbers to one partition,
+  * so each part is uploaded exactly once, whole; parts need no global
+  * order across partitions (the receipts are sorted on the driver), so
+  * no range partitioner, and no sample job over the blobs, is needed.
   */
 object OrderedMultipartWriter {
 
@@ -247,7 +248,7 @@ object OrderedMultipartWriter {
     val receipts = blobs
       .map(b => (((b.offset / target) + 1).toInt, b.offset, b.bytes))
       .toDF("partNumber", "offset", "bytes")
-      .repartitionByRange($"partNumber")
+      .repartition($"partNumber")
       .sortWithinPartitions($"partNumber", $"offset")
       .as[(Int, Long, Array[Byte])]
       .mapPartitions { it =>

@@ -260,4 +260,136 @@ class CogWriterSpec extends SparkSpec {
         assert(px(y * 16 + x) == src.pixels(y * tw + x), s"tile($ty,$tx) ($y,$x)")
     }
   }
+
+  test("header stats hold where Σv² overflows decimal(38,12): float64 at 1e12 and 1e14") {
+    val s = spark
+    import s.implicits._
+    val p = RasterProfile(64, 64, blockSize = 64, nodata = ND,
+      minOverviewSize = 64, dtype = "float64")
+    for (scale <- Seq(1e12, 1e14)) {
+      // one 64×64 tile: Σv² ≈ 4096 · 1.3 · scale² ≥ 5e27, past the 26
+      // integer digits a decimal(38,12) keeps
+      val px = Array.tabulate(64 * 64)(i => scale * (1 + (i % 7) / 10.0))
+      val (bytes, res) = CogWriter.writeBytes(
+        s.createDataset(Seq(Tile(0, 0, 0, 64, 64, px, null))), p, tmpDir())
+      val mean = px.sum / px.length
+      val stddev = math.sqrt(px.map(v => (v - mean) * (v - mean)).sum / px.length)
+      val xml = BigTiff.readPages(bytes).head.metadataXml
+      for ((name, want) <- Seq("MEAN" -> mean, "STDDEV" -> stddev)) {
+        val re = ("name=\"STATISTICS_" + name + """\s*" sample="0">([^<]+)<""").r
+        val got = re.findFirstMatchIn(xml).map(_.group(1).trim.toDouble)
+          .getOrElse(fail(s"STATISTICS_$name missing at $scale"))
+        assert(math.abs(got - want) <= 1e-9 * want, s"$name at $scale: $got vs $want")
+      }
+      assert(math.abs(res.stats.head.mean - mean) <= 1e-9 * mean)
+    }
+  }
+
+  test("exactSum matches Spark's decimal(38,12) sum for in-range partials") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, sum}
+    val rnd = new scala.util.Random(5)
+    // mixed magnitudes and signs, several decimals past scale 12
+    val xs = Array.fill(2000)((rnd.nextDouble() - 0.3) * math.pow(10, rnd.nextInt(26) - 12))
+    val viaSpark = xs.toSeq.toDF("v")
+      .agg(sum(col("v").cast("decimal(38,12)")).cast("double")).head().getDouble(0)
+    assert(CogWriter.exactSum(xs) == viaSpark)
+    assert(CogWriter.exactSum(xs.reverse) == viaSpark)
+  }
+
+  test("Offsets.place: exclusive prefix sum in (level desc, ty, tx, page) order") {
+    val s = spark
+    import s.implicits._
+    // three levels, data + mask pages, sparse tiles (nbytes 0) among them
+    val keys = for {
+      level <- 0 to 2
+      n = 4 >> level
+      ty <- 0 until n; tx <- 0 until n; page <- 0 to 1
+    } yield (level, ty, tx, page)
+    val tiles = keys.map { case (l, ty, tx, pg) =>
+      val n = if ((ty + tx + l) % 3 == 0) 0 else 1 + (ty * 7 + tx * 3 + l * 11 + pg) % 17
+      EncodedTile(l, ty, tx, pg, n, Array.fill(n)((l * 16 + ty * 4 + tx).toByte),
+        16, Array(n.toLong), Array(1.0), Array(1.0), Array(0.0), Array(1.0))
+    }
+    val shuffled = new scala.util.Random(3).shuffle(tiles)
+    val encoded = s.createDataset(shuffled).repartition(5)
+    val headerLen = 1000L
+    val placement = Offsets.place(encoded, headerLen)
+    try {
+      val fileOrder = tiles.sortBy(e => (-e.level, e.ty, e.tx, e.page))
+      val want = fileOrder.map(_.nbytes.toLong).scanLeft(headerLen)(_ + _)
+        .zip(fileOrder).map { case (off, e) =>
+          (e.level, e.ty, e.tx, e.page) -> (if (e.nbytes == 0) 0L else off)
+        }.toMap
+      assert(placement.meta.map(e => (e.level, e.ty, e.tx, e.page)).toSeq ==
+        fileOrder.map(e => (e.level, e.ty, e.tx, e.page)))
+      assert(placement.meta.forall(_.bytes.isEmpty), "metadata must not carry bytes")
+      placement.meta.zip(placement.offsets).foreach { case (e, off) =>
+        assert(off == want((e.level, e.ty, e.tx, e.page)), s"meta offset of $e")
+      }
+      val placed = placement.placed.collect()
+      assert(placed.length == tiles.length)
+      val src = tiles.map(e => (e.level, e.ty, e.tx, e.page) -> e).toMap
+      placed.foreach { p =>
+        val k = (p.level, p.ty, p.tx, p.page)
+        assert(p.offset == want(k), s"placed offset of $k")
+        assert(p.nbytes == src(k).nbytes && p.bytes.sameElements(src(k).bytes))
+      }
+      assert(tiles.exists(_.nbytes == 0) && tiles.exists(_.nbytes > 0))
+    } finally placement.cached.unpersist()
+  }
+
+  test("write shape: one lanczos + mask-pages write submits at most 13 jobs") {
+    val p = RasterProfile(256, 256, blockSize = 64, bands = 2, nodata = ND,
+      resampling = "lanczos", minOverviewSize = 64, dtype = "float64",
+      maskPages = true)
+    assert(p.maxLevel == 2)
+    val level0 = SyntheticRaster.generate(spark, p, seed = 13L)
+    CogWriter.writeBytes(level0, p, tmpDir()) // warm: jobs are counted, not timed
+    val jobs = JobCounter.jobsOf(spark.sparkContext) {
+      CogWriter.writeBytes(level0, p, tmpDir())
+    }
+    // the encode runs in one job that fills the cache, and the sink's
+    // hash shuffle runs without a sample job; a range shuffle over the
+    // encode, or a Spark-side stats aggregation, adds jobs again
+    assert(jobs <= 13, s"CogWriter.write submitted $jobs jobs")
+  }
+}
+
+/** Counts the jobs a body submits. Listener events arrive
+  * asynchronously but in order, so counting between two sentinel jobs,
+  * one submitted before the body and one after it returns, sees exactly
+  * the body's jobs. */
+object JobCounter {
+  import org.apache.spark.SparkContext
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  private val Key = "graft.test.jobCounter"
+
+  def jobsOf(sc: SparkContext)(body: => Unit): Int = {
+    val tag = s"job-counter-${System.nanoTime()}"
+    val sentinels = new java.util.concurrent.atomic.AtomicInteger
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Key) == tag)) {
+          if (sentinels.incrementAndGet() == 2) done.countDown()
+        } else if (sentinels.get == 1) counted.incrementAndGet()
+    }
+    def sentinel(): Unit = {
+      sc.setLocalProperty(Key, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel()
+      body
+      sentinel()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

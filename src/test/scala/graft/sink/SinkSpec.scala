@@ -3,6 +3,24 @@ package graft.sink
 import graft.SparkSpec
 import java.nio.file.Files
 
+/** Top-level (a spec-inner class would drag the non-serializable suite
+  * into the task closure): a local sink that records every uploadPart
+  * call in a JVM-wide ledger under its `id`. Each task deserializes its
+  * own copy of the sink, so the ledger is the only place the calls of
+  * all tasks meet; local mode runs them in the test JVM. */
+private class CountingSink(dir: String, id: String) extends LocalMultipartSink(dir) {
+  override def uploadPart(partNumber: Int, bytes: Array[Byte]): String = {
+    CountingSink.uploads.computeIfAbsent(id,
+      _ => new java.util.concurrent.ConcurrentLinkedQueue[Int]).add(partNumber)
+    super.uploadPart(partNumber, bytes)
+  }
+}
+
+private object CountingSink {
+  val uploads = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.ConcurrentLinkedQueue[Int]]
+}
+
 /** OrderedMultipartWriter invariants (SURVEY §5.2-3e): parts contiguous
   * and order-preserving, every non-final part ≥ 5 MiB, count ≤ 10,000,
   * idempotent re-upload, byte-identical assembly. */
@@ -43,6 +61,26 @@ class SinkSpec extends SparkSpec {
     for (r <- receipts.dropRight(1))
       assert(r.size >= OrderedMultipartWriter.S3MinPart,
         s"part ${r.partNumber} under 5 MiB: ${r.size}")
+    assert(java.util.Arrays.equals(sink.assembled, expect))
+  }
+
+  test("hash-partitioned packing uploads every part exactly once, more parts than partitions") {
+    val s = spark
+    import s.implicits._
+    val (blobs, expect) = blobStream(48)
+    val maxBlob = blobs.map(_.bytes.length.toLong).max
+    val id = s"counting-${System.nanoTime()}"
+    val sink = new CountingSink(tmp(), id)
+    // defaultPart 0: the 5 MiB + maxBlob floor sets the target, so the
+    // 48 MiB stream packs into more parts than there are shuffle partitions
+    val receipts = OrderedMultipartWriter.write(
+      s.createDataset(blobs), expect.length.toLong, maxBlob, sink, defaultPart = 0L)
+    assert(receipts.size > s.conf.get("spark.sql.shuffle.partitions").toInt)
+    // write returned, so the contiguity audit passed
+    assert(receipts.map(_.partNumber) == (1 to receipts.size))
+    import scala.jdk.CollectionConverters._
+    val uploaded = CountingSink.uploads.get(id).asScala.toSeq
+    assert(uploaded.sorted == receipts.map(_.partNumber), "each part uploaded exactly once")
     assert(java.util.Arrays.equals(sink.assembled, expect))
   }
 
