@@ -8,7 +8,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * (the reference is write-only; an engine that can't re-read its own
   * output can't chain pipelines). The header is tiny and parsed on the
   * driver; tile BYTES are fetched and decoded on executors via ranged
-  * reads — one seek per tile, the access pattern COG exists to enable.
+  * reads, the access pattern COG exists to enable. `read` and
+  * `readStrips` check the header against the caller's expectations and
+  * then run on the `cog` source (graft.sources.CogScan), which plans,
+  * prunes and coalesces the ranges; this object holds the decode
+  * kernels that source calls.
   *
   * Works through the Hadoop FileSystem API, so file:// now and
   * hdfs://s3a:// on a real cluster (ranged GET). Sparse tiles
@@ -25,16 +29,25 @@ object CogReader {
     * larger ones surface BigTiff's clear beyond-the-probe error
     * instead of a raw index crash. */
   def readMeta(uri: String, confEntries: Map[String, String] = Map.empty): Seq[BigTiff.PageMeta] = {
-    val fs = fileSystem(uri, confEntries)
-    val len = fs.getFileStatus(new Path(uri)).getLen
+    // one FileSystem lookup per call: building and resolving a Hadoop
+    // Configuration costs more than parsing a KB-scale header
+    val conf = new Configuration()
+    confEntries.foreach { case (k, v) => conf.set(k, v) }
+    val path = new Path(uri)
+    val fs = path.getFileSystem(conf)
+    val len = fs.getFileStatus(path).getLen
     // growing probe ladder (GDAL reads 16 KiB first and grows the same
     // way): typical COG headers are KBs, so the 64 KiB rung answers
     // almost every file — at a 10k-file mosaic that is ~640 MB of
     // planning transfer instead of the 40 GB a flat 4 MiB probe costs.
     // Headers with big external offset arrays climb to 4 MiB, then the
     // whole file (bounded: a >64 MiB "header" is rejected as before).
-    def attempt(probe: Long): Seq[BigTiff.PageMeta] =
-      BigTiff.readPages(readRange(uri, 0L, math.min(len, probe).toInt, confEntries))
+    def attempt(probe: Long): Seq[BigTiff.PageMeta] = {
+      val buf = new Array[Byte](math.min(len, probe).toInt)
+      val in = fs.open(path)
+      try in.readFully(0L, buf, 0, buf.length) finally in.close()
+      BigTiff.readPages(buf)
+    }
     try attempt(64L << 10)
     catch {
       case _: BigTiff.HeaderProbeTooSmall if len > (64L << 10) =>
@@ -46,58 +59,6 @@ object CogReader {
     }
   }
 
-  private def fileSystem(uri: String, confEntries: Map[String, String]) = {
-    val conf = new Configuration()
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
-    new Path(uri).getFileSystem(conf)
-  }
-
-  private def readRange(uri: String, offset: Long, length: Int,
-      confEntries: Map[String, String]): Array[Byte] = {
-    val fs = fileSystem(uri, confEntries)
-    val in = fs.open(new Path(uri))
-    try {
-      val buf = new Array[Byte](length)
-      in.readFully(offset, buf, 0, length)
-      buf
-    } finally in.close()
-  }
-
-  /** Close `in` at TASK completion (limit/take abandons iterators
-    * before exhaustion — exhaustion-only close leaks the handle).
-    * Outside a task (direct invocation) close on exhaustion, with a
-    * GC-time cleaner covering partially-consumed abandoned iterators
-    * so the stream cannot leak indefinitely there either. */
-  private lazy val cleaner = java.lang.ref.Cleaner.create()
-  private def taskBoundIterator[T](in: org.apache.hadoop.fs.FSDataInputStream,
-      out: Iterator[T]): Iterator[T] = {
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) {
-      tc.addTaskCompletionListener[Unit](_ => in.close())
-      out
-    } else {
-      val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
-      // must not capture the iterator itself, or it never becomes
-      // phantom-reachable and the cleaner never runs
-      val closeOnce: Runnable =
-        () => if (closed.compareAndSet(false, true)) in.close()
-      val it = new Iterator[T] {
-        def hasNext: Boolean = {
-          val h = out.hasNext
-          if (!h) closeOnce.run()
-          h
-        }
-        def next(): T = out.next()
-      }
-      cleaner.register(it, closeOnce)
-      it
-    }
-  }
-
-  /** Decode one planned tile entry into a [[Tile]] (clip to edge dims,
-    * restore the mask plane); sparse entries (count 0) reconstruct as
-    * all-nodata without touching the stream. Shared by the library
-    * read path and the DSv2 partition reader (graft.sources.cog). */
   /** Planar (PlanarConfiguration=2) tile: one compressed blob PER
     * BAND, decoded with a single-band view of the profile and laid
     * straight into the band-major pixel array — planar planes ARE our
@@ -150,13 +111,13 @@ object CogReader {
   }
 
   /** Strip layout of a strip-organized page, with the consistency
-    * checks BOTH strip consumers (readStrips and the DSv2 planner)
-    * need: effective rows-per-strip (the TIFF 6.0 2^32-1 "whole image
-    * in one strip" sentinel clamps to the image height instead of
-    * truncating negative), spatial strip count derived from the
-    * geometry — NOT from the offsets array, so a truncated offsets
-    * array fails loudly here instead of silently shifting plane base
-    * offsets — and the planar plane count. */
+    * checks the `cog` source's strip planner needs: effective
+    * rows-per-strip (the TIFF 6.0 2^32-1 "whole image in one strip"
+    * sentinel clamps to the image height instead of truncating
+    * negative), spatial strip count derived from the geometry — NOT
+    * from the offsets array, so a truncated offsets array fails loudly
+    * here instead of silently shifting plane base offsets — and the
+    * planar plane count. */
   def stripLayout(pg: BigTiff.PageMeta): (Int, Int, Int) = {
     val height = pg.height.toInt
     val rps = math.min(pg.rowsPerStrip, pg.height).toInt
@@ -185,8 +146,7 @@ object CogReader {
     * as a single-band strip straight into the band-major pixel array
     * (the strip analog of [[materializeTilePlanar]]). An absent plane
     * (count 0) fills with nodata, matching sparse-tile semantics.
-    * Shared by the library readStrips path and the DSv2 strip
-    * partition reader. */
+    * Called by the `cog` source's strip partition reader. */
   def materializeStripPlanar(in: org.apache.hadoop.fs.FSDataInputStream,
       offs: Seq[Long], cnts: Seq[Long], rows: Int, width: Int,
       codec: String, predictor: Int, dtype: String,
@@ -212,6 +172,10 @@ object CogReader {
     out
   }
 
+  /** Decode one planned tile entry into a [[Tile]] (clip to edge dims,
+    * restore the mask plane); sparse entries (count 0) reconstruct as
+    * all-nodata without touching the stream. Called by the `cog`
+    * source's partition reader (graft.sources.CogPartitionReader). */
   def materializeTile(in: org.apache.hadoop.fs.FSDataInputStream,
       profile: RasterProfile, level: Int, gw: Int,
       ti: Int, off: Long, cnt: Long, mOff: Long, mCnt: Long): Tile = {
@@ -274,6 +238,21 @@ object CogReader {
         geographic = Some(modelType == 2)))
     } else None
 
+  /** Codec name for a TIFF Compression (tag 259) value; None when the
+    * engine has no decoder for it. 8 = Adobe deflate; 32946 = legacy
+    * old-style Deflate (the JDK writer's "Deflate" type, pre-TIFF-
+    * TechNote files) — both are the same zlib stream, only the tag
+    * value differs. */
+  def codecOf(compression: Int): Option[String] = compression match {
+    case 1 => Some("none")
+    case 5 => Some("lzw")
+    case 7 => Some("jpeg")
+    case 8 | 32946 => Some("deflate")
+    case 32773 => Some("packbits")
+    case 50000 => Some("zstd")
+    case _ => None
+  }
+
   /** Engine dtype name for a (BitsPerSample, SampleFormat) tag pair. */
   def dtypeOf(bits: Int, sampleFormat: Int): String =
     (bits, sampleFormat) match {
@@ -301,18 +280,8 @@ object CogReader {
     require(data.nonEmpty, "no data pages in header")
     val p0 = data.head
     val dtype = dtypeOf(p0.bits, p0.sampleFormat)
-    def codec(c: Int): String = c match {
-      case 1 => "none"
-      case 5 => "lzw"
-      case 7 => "jpeg"
-      // 8 = Adobe deflate; 32946 = legacy old-style Deflate (the JDK
-      // writer's "Deflate" type, pre-TIFF-TechNote files) — both are
-      // the same zlib stream, only the tag value differs
-      case 8 | 32946 => "deflate"
-      case 32773 => "packbits"
-      case 50000 => "zstd"
-      case c => sys.error(s"unsupported compression code $c")
-    }
+    def codec(c: Int): String =
+      codecOf(c).getOrElse(sys.error(s"unsupported compression code $c"))
     require(!p0.isStriped,
       "strip-organized TIFF (no tiles): use CogReader.readStrips")
     // materializeTile strides rows by the profile's single blockSize:
@@ -380,115 +349,45 @@ object CogReader {
     * tile per strip, (ty = strip index, tx = 0, h = strip rows, w =
     * image width). GDAL's default layout for plain TIFFs, so "read any
     * GeoTIFF someone hands you" needs it even though COGs are tiled.
-    * Pure header-driven: codec/dtype/predictor/nodata come from the
-    * page tags; executors do one ranged read + decode per strip. */
+    * The header is checked on the driver; planning and decode are the
+    * `cog` source's (codec/dtype/predictor/nodata from the page tags). */
   def readStrips(spark: SparkSession, uri: String,
       confEntries: Map[String, String] = Map.empty): Dataset[Tile] = {
-    import spark.implicits._
     val pages = readMeta(uri, confEntries)
     // only the first page would be read — reject extra IFDs loudly
     // rather than silently dropping their rows
     require(pages.length == 1, s"striped TIFF has ${pages.length} IFDs — " +
       "multi-page striped files are unsupported")
-    val pg = pages.head
-    require(pg.isStriped, s"not strip-organized (tileW=${pg.tileW})")
-    val codec = pg.compression match {
-      case 1 => "none"
-      case 5 => "lzw"
-      case 8 | 32946 => "deflate" // 32946 = legacy old-style Deflate
-      case 32773 => "packbits"
-      case 50000 => "zstd"
-      case c => sys.error(s"unsupported strip compression code $c")
-    }
-    val dtype = dtypeOf(pg.bits, pg.sampleFormat)
-    val width = pg.width.toInt
-    val height = pg.height.toInt
-    val bands = pg.samplesPerPixel
-    val pred = pg.predictor
-    val mm = pg.bigEndian
-    val nodata = nodataOf(pg, dtype)
-    // planar (=2) pages: offsets hold bands consecutive plane arrays
-    // (all plane-0 strips, then plane-1, ... — TIFF 6.0 §14); one
-    // OUTPUT strip gathers its per-plane chunks, each decoding as a
-    // single-band strip straight into the band-major pixel array.
-    val (nStrips, planes, rps) = stripLayout(pg)
-    val plan = (0 until nStrips).map { si =>
-      (si,
-        Array.tabulate(planes)(b => pg.offsets(b * nStrips + si)).toSeq,
-        Array.tabulate(planes)(b => pg.counts(b * nStrips + si)).toSeq,
-        math.min(rps, height - si * rps)) // last strip may be short
-    }
-    val bcConf = spark.sparkContext.broadcast(confEntries)
-    spark.createDataset(plan)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        val conf = new Configuration()
-        bcConf.value.foreach { case (k, v) => conf.set(k, v) }
-        val path = new Path(uri)
-        val in = path.getFileSystem(conf).open(path)
-        val out = it.map { case (si, offs, cnts, rows) =>
-          val px =
-            if (planes == 1) {
-              if (cnts.head == 0) { // sparse strip: all nodata
-                val a = new Array[Double](bands * rows * width)
-                java.util.Arrays.fill(a, nodata)
-                a
-              } else {
-                val comp = new Array[Byte](cnts.head.toInt)
-                in.readFully(offs.head, comp, 0, cnts.head.toInt)
-                TileCodec.decodeStrip(comp, codec, pred, rows, width,
-                  bands, dtype, bigEndian = mm)
-              }
-            } else materializeStripPlanar(in, offs, cnts, rows, width,
-              codec, pred, dtype, bigEndian = mm, nodata = nodata)
-          Tile(0, si, 0, rows, width, px, null)
-        }
-        taskBoundIterator(in, out)
-      }
+    require(pages.head.isStriped, s"not strip-organized (tileW=${pages.head.tileW})")
+    levelTiles(spark, uri, 0, confEntries)
   }
 
   /** Level `level` of the COG at `uri` as a Dataset[Tile]. `profile`
     * must match the written file (CogWriter's input profile); dims and
-    * page structure are cross-checked against the parsed header. */
+    * page structure are cross-checked against the parsed header, then
+    * the `cog` source plans and decodes the level. */
   def read(spark: SparkSession, uri: String, profile: RasterProfile,
       level: Int = 0, confEntries: Map[String, String] = Map.empty): Dataset[Tile] = {
-    import spark.implicits._
-    val pages = readMeta(uri, confEntries)
-    val data = pages.filter(!_.isMask)
-    require(level < data.length, s"level $level beyond ${data.length} pages")
+    val data = readMeta(uri, confEntries).filter(!_.isMask)
+    require(level >= 0 && level < data.length,
+      s"level $level outside the file's ${data.length} pages")
     val pg = data(level)
-    // planar foreign files read through the DSv2 source (whose planner
-    // carries per-plane offsets); this writer-profile path assumes the
-    // chunky layout CogWriter emits
-    require(pg.planar == 1,
-      "planar TIFF: read via spark.read.format(\"cog\") instead")
+    require(!pg.isStriped,
+      "strip-organized TIFF (no tiles): use CogReader.readStrips")
     val (lw, lh) = profile.levelDims(level)
     require(pg.width == lw && pg.height == lh,
       s"header dims (${pg.width}x${pg.height}) != profile level dims (${lw}x$lh)")
-    val maskPg = pages.filter(_.isMask).lift(level)
-    val (gw, _) = profile.gridDims(level)
+    levelTiles(spark, uri, level, confEntries)
+  }
 
-    // plan rows are tiny: (tileIdx, offset, count, maskOffset, maskCount)
-    val plan = pg.offsets.indices.map { i =>
-      (i, pg.offsets(i), pg.counts(i),
-        maskPg.map(_.offsets(i)).getOrElse(0L),
-        maskPg.map(_.counts(i)).getOrElse(0L))
-    }
-    val bcConf = spark.sparkContext.broadcast(confEntries)
-
-    spark.createDataset(plan)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions { it =>
-        // one FileSystem handle per partition, ranged reads per tile
-        val conf = new Configuration()
-        bcConf.value.foreach { case (k, v) => conf.set(k, v) }
-        val path = new Path(uri)
-        val fs = path.getFileSystem(conf)
-        val in = fs.open(path)
-        val out = it.map { case (ti, off, cnt, mOff, mCnt) =>
-          materializeTile(in, profile, level, gw, ti, off, cnt, mOff, mCnt)
-        }
-        taskBoundIterator(in, out)
-      }
+  /** One level of the `cog` source's rows, as [[Tile]]s: the level
+    * predicate prunes the other levels' tiles at planning. */
+  private def levelTiles(spark: SparkSession, uri: String, level: Int,
+      confEntries: Map[String, String]): Dataset[Tile] = {
+    import spark.implicits._
+    spark.read.format("cog").options(confEntries).load(uri)
+      .where($"level" === level)
+      .select("level", "ty", "tx", "h", "w", "pixels", "mask")
+      .as[Tile]
   }
 }

@@ -1183,14 +1183,9 @@ class CogScan(paths: Seq[String], conf: Map[String, String],
     var remaining = limit.getOrElse(Int.MaxValue)
 
     def planStriped(uri: String, pg: BigTiff.PageMeta): Seq[InputPartition] = {
-      val codec = pg.compression match {
-        case 1 => "none"
-        case 5 => "lzw"
-        case 8 | 32946 => "deflate" // 32946 = legacy old-style Deflate
-        case 32773 => "packbits"
-        case 50000 => "zstd"
-        case c => sys.error(s"unsupported strip compression code $c")
-      }
+      // strips decode through TileCodec.decodeStrip, which has no jpeg
+      val codec = CogReader.codecOf(pg.compression).filter(_ != "jpeg")
+        .getOrElse(sys.error(s"unsupported strip compression code ${pg.compression}"))
       // shared layout derivation: strip count from the geometry (not
       // the offsets array), 2^32-1 RowsPerStrip sentinel clamped,
       // offsets/counts lengths cross-checked
@@ -1576,7 +1571,7 @@ class CogPartitionReader(part: CogInputPartition)
     lazy val pixels =
       if (s.pOff.nonEmpty) {
         // planar: one chunk per band, decoded band-major by the shared
-        // gather (same kernel as the library readStrips path)
+        // gather (CogReader.materializeStripPlanar)
         CogReader.materializeStripPlanar(in, s.pOff, s.pCnt, rows,
           ss.width, ss.codec, ss.predictor, ss.dtype, ss.bigEndian, ss.nodata)
       } else if (s.cnt == 0) { // sparse strip: all nodata

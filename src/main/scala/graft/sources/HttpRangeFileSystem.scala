@@ -10,13 +10,14 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
 /** Read-only Hadoop FileSystem over HTTP ranged GETs — the seam that
-  * lets every existing read path (CogReader.readMeta/read/readStrips,
-  * the DSv2 single-file and mosaic planners) consume a COG straight
+  * lets the read path (CogReader.readMeta's header probe, the `cog`
+  * source's single-file and mosaic planners and its partition reader,
+  * which CogReader.read/readStrips also run on) consume a COG straight
   * from an object-store or static-file endpoint with NO full-file
   * download, exactly the access pattern the reference assumes for
   * COG-on-S3 (ccog/README.md:9 "cloud optimised geotiff" +
-  * aws_tools.py's S3 store): KB-scale header probe, then one bounded
-  * range request per tile/strip.
+  * aws_tools.py's S3 store): KB-scale header probe, then bounded
+  * range requests for the tiles/strips (one per coalesced span).
   *
   * This is the same plug-point s3a uses: register with
   * `fs.http.impl = graft.sources.HttpRangeFileSystem` (and/or

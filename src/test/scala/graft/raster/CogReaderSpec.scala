@@ -315,4 +315,43 @@ class CogReaderSpec extends SparkSpec {
       }
     }
   }
+
+  test("CogReader.read plans no shuffle: the level scan runs where its tiles are read") {
+    val prof = RasterProfile(96, 80, blockSize = 16, nodata = ND,
+      minOverviewSize = 32)
+    val (uri, expected) = writeCog(prof, seed = 78L)
+    val sc = spark.sparkContext
+    var got = Array.empty[Tile]
+    val decodeBytes = JobCounter.shuffleBytesOf(sc) {
+      got = CogReader.read(spark, uri, prof, 0).collect()
+    }
+    assert(got.map(t => (t.level, t.ty, t.tx)).toSet == expected.keySet.filter(_._1 == 0))
+    val countBytes = JobCounter.shuffleBytesOf(sc) {
+      assert(CogReader.read(spark, uri, prof, 1).count() == prof.tilesPerLevel(1))
+    }
+    assert(decodeBytes == 0L && countBytes == 0L,
+      s"shuffle bytes written: collect $decodeBytes, count $countBytes")
+  }
+
+  test("read rejects a negative level with a clear argument error") {
+    val prof = RasterProfile(64, 32, blockSize = 16, nodata = ND,
+      overviewCount = Some(0))
+    val (uri, _) = writeCog(prof, seed = 79L)
+    val ex = intercept[IllegalArgumentException](CogReader.read(spark, uri, prof, -1))
+    assert(ex.getMessage.contains("level -1"), ex.getMessage)
+  }
+
+  test("read refuses a strip-organized file and points at readStrips") {
+    val (width, height, rps) = (40, 25, 8)
+    val strips = (0 until (height + rps - 1) / rps).map { si =>
+      TileCodec.deflate(new Array[Byte](math.min(rps, height - si * rps) * width))
+    }.toArray
+    val f = Paths.get(Files.createTempDirectory("graft-read-strips").toString, "s.tif")
+    Files.write(f, ClassicTiff.emitStripped(width, height, rps, 8, strips))
+    val prof = RasterProfile(width, height, blockSize = 16, nodata = 0,
+      dtype = "uint8", overviewCount = Some(0))
+    val ex = intercept[IllegalArgumentException](
+      CogReader.read(spark, "file://" + f, prof, 0).collect())
+    assert(ex.getMessage.contains("readStrips"), ex.getMessage)
+  }
 }

@@ -357,26 +357,35 @@ class CogWriterSpec extends SparkSpec {
   }
 }
 
-/** Counts the jobs a body submits. Listener events arrive
-  * asynchronously but in order, so counting between two sentinel jobs,
-  * one submitted before the body and one after it returns, sees exactly
-  * the body's jobs. */
+/** Counts the jobs a body submits and the shuffle bytes its tasks
+  * write. Listener events arrive asynchronously but in order, so
+  * counting between two sentinel jobs, one submitted before the body
+  * and one after it returns, sees exactly the body's jobs and tasks. */
 object JobCounter {
   import org.apache.spark.SparkContext
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 
   private val Key = "graft.test.jobCounter"
 
-  def jobsOf(sc: SparkContext)(body: => Unit): Int = {
+  def jobsOf(sc: SparkContext)(body: => Unit): Int = measure(sc)(body)._1
+
+  def shuffleBytesOf(sc: SparkContext)(body: => Unit): Long = measure(sc)(body)._2
+
+  /** (jobs submitted, shuffle bytes written) by `body`. */
+  private def measure(sc: SparkContext)(body: => Unit): (Int, Long) = {
     val tag = s"job-counter-${System.nanoTime()}"
     val sentinels = new java.util.concurrent.atomic.AtomicInteger
     val counted = new java.util.concurrent.atomic.AtomicInteger
+    val shuffled = new java.util.concurrent.atomic.AtomicLong
     val done = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(Key) == tag)) {
           if (sentinels.incrementAndGet() == 2) done.countDown()
         } else if (sentinels.get == 1) counted.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (sentinels.get == 1 && e.taskMetrics != null)
+          shuffled.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     def sentinel(): Unit = {
       sc.setLocalProperty(Key, tag)
@@ -389,7 +398,7 @@ object JobCounter {
       body
       sentinel()
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
-      counted.get
+      (counted.get, shuffled.get)
     } finally sc.removeSparkListener(listener)
   }
 }

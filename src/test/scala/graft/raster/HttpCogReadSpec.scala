@@ -119,9 +119,14 @@ class HttpCogReadSpec extends SparkSpec {
       srv.failNextRequests(2) // throttle the HEAD, like S3 SlowDown
       val pages = CogReader.readMeta(uri, conf)
       assert(pages.nonEmpty, "meta read did not survive transient 500s")
-      srv.failNextRequests(2) // and a tile-range GET mid-read
+      // and two tile-range GETs mid-read: the read re-fetches the
+      // header on the driver first, so the failures are aimed at
+      // ranges starting at or after the first tile byte
+      val firstTile = pages.flatMap(_.offsets).filter(_ > 0).min
+      srv.failNextRangedGetsFrom(firstTile, 2)
       val tiles = CogReader.read(spark, uri, prof, 0, conf).collect()
       assert(tiles.nonEmpty, "tile read did not survive transient 500s")
+      assert(srv.failedBodyReadsPending == 0, "no tile GET hit the injected 500s")
     }
   }
 

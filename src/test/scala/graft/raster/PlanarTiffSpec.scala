@@ -7,8 +7,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * separate plane tiles. Our Tile is band-major, so planes decode
   * straight into place (round 9) — this spec hand-builds a classic
   * little-endian planar TIFF and pins exact pixels through the DSv2
-  * source, plus the loud rejections that remain (library read path,
-  * striped planar). */
+  * source (and CogReader.read, which runs on it), plus the loud
+  * rejections that remain. */
 class PlanarTiffSpec extends SparkSpec {
 
   /** 16×16, 2 bands, uint8, uncompressed, ONE 16×16 tile per plane.
@@ -316,12 +316,17 @@ class PlanarTiffSpec extends SparkSpec {
     assert(ex.getMessage.contains("YCbCr"), ex.getMessage)
   }
 
-  test("library CogReader.read refuses planar files loudly") {
-    val (uri, _, _) = buildPlanarTiff()
-    val pages = CogReader.readMeta(uri, Map.empty)
-    val prof = CogReader.inferProfile(pages)
-    val ex = intercept[IllegalArgumentException](
-      CogReader.read(spark, uri, prof, 0).collect())
-    assert(ex.getMessage.contains("planar"), ex.getMessage)
+  test("CogReader.read on a planar file equals the cog source's rows") {
+    val (uri, plane0, _) = buildPlanarTiff()
+    val prof = CogReader.inferProfile(CogReader.readMeta(uri, Map.empty))
+    val lib = CogReader.read(spark, uri, prof, 0).collect()
+    val src = spark.read.format("cog").load(uri).where("level = 0")
+      .select("ty", "tx", "h", "w", "pixels", "mask").collect()
+    assert(lib.length == 1 && src.length == 1)
+    val (t, r) = (lib.head, src.head)
+    assert((t.ty, t.tx, t.h, t.w) == (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+    assert(t.pixels.toSeq == r.getSeq[Double](4))
+    assert(t.mask == null && r.isNullAt(5))
+    assert(t.pixels(0) == (plane0(0) & 0xFF).toDouble)
   }
 }

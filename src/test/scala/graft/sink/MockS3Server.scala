@@ -50,6 +50,16 @@ class MockS3Server {
   def stop(): Unit = server.stop(0)
 
   def failNextRequests(n: Int): Unit = fail500.set(n)
+  /** Fail the next `n` ranged GETs whose range starts at or after
+    * `from` (e.g. a COG's first tile offset): the header probe and
+    * every other request pass, only body reads hit the 500s. */
+  def failNextRangedGetsFrom(from: Long, n: Int): Unit = {
+    failRangedFrom = from
+    failRanged.set(n)
+  }
+  @volatile private var failRangedFrom = 0L
+  private val failRanged = new AtomicInteger(0)
+  def failedBodyReadsPending: Int = failRanged.get()
   def errorBodyOnNextComplete(): Unit = errorBodyOnCompletes(1)
   /** Inject `n` consecutive 200-with-<Error> complete answers carrying
     * `code` — InternalError is AWS's documented retry-me case; any
@@ -383,6 +393,13 @@ class MockS3Server {
   private def handle(ex: HttpExchange): Unit = try {
     if (fail500.getAndUpdate(n => math.max(0, n - 1)) > 0) {
       s3Error(ex, 500, "InternalError", "injected transient failure"); return
+    }
+    val rangeStart = Option(ex.getRequestHeaders.getFirst("Range"))
+      .filter(r => ex.getRequestMethod == "GET" && r.startsWith("bytes="))
+      .flatMap(_.stripPrefix("bytes=").takeWhile(_ != '-').toLongOption)
+    if (rangeStart.exists(_ >= failRangedFrom) &&
+        failRanged.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+      s3Error(ex, 500, "InternalError", "injected transient body-read failure"); return
     }
     val body = readAll(ex)
     if (sigCheck.isDefined) checkSignature(ex, body) match {

@@ -12,7 +12,10 @@ between runs of identical code:
   - `TmpDirs.create` directories, `/tmp/<prefix><digits>`;
   - the fixed-path staging root, `/tmp/graft_stage-<user>/<pid>`;
   - JVM lambda class names, `$Lambda$<n>/0x<addr>@<hash>`;
-  - source line numbers in RDD call sites, `<File>.scala:<line>`.
+  - source line numbers in RDD call sites, `<File>.scala:<line>`;
+  - RDD ids, `<Name>RDD[<n>]`: one counter per SparkContext, so every
+    later query's ids shift when an earlier query creates a different
+    number of RDDs, even where its own plan is identical.
 
 Prints every query whose normalised plan differs (or that only one dump
 has), then a summary line. Exits 1 if any query differs, else 0.
@@ -29,6 +32,7 @@ RULES = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
     (re.compile(r"(\.scala):\d+"), r"\1:N"),
+    (re.compile(r"(RDD)\[\d+\]"), r"\1[N]"),
 ]
 
 
